@@ -680,114 +680,6 @@ _JPEG_QTABLE_LUMA = 8
 _JPEG_QTABLE_CHROMA = 12
 
 
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    unstuffing and restart-marker awareness.
-
-    Accumulator design (the table-driven fast path): whole data bytes
-    are pulled into an int accumulator a few at a time — refill stops
-    at any REAL marker (a 0xFF not followed by 0x00), so buffered bits
-    are always pure entropy data — and `receive`/`peek16` cost O(1)
-    int ops per symbol instead of one Python call per bit. `pos` is
-    always a byte boundary in the ORIGINAL payload at or before the
-    next marker; any bits still buffered when a scan ends are that
-    final byte's padding."""
-
-    __slots__ = ("data", "pos", "acc", "nbits", "marker")
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-        self.marker: int | None = None  # marker refill stopped at; -1 EOF
-
-    def _refill(self, need: int) -> None:
-        if self.marker is not None:
-            return
-        d = self.data
-        pos, acc, n = self.pos, self.acc, self.nbits
-        size = len(d)
-        while n < need:
-            if pos >= size:
-                self.marker = -1
-                break
-            b = d[pos]
-            if b == 0xFF:
-                nxt = d[pos + 1] if pos + 1 < size else -1
-                if nxt != 0x00:
-                    self.marker = nxt
-                    break
-                pos += 2  # stuffed FF: the FF byte is data
-            else:
-                pos += 1
-            acc = (acc << 8) | b
-            n += 8
-        self.pos, self.acc, self.nbits = pos, acc, n
-
-    def _starved(self):
-        """Out of bits: surface what stopped the refill, matching the
-        per-bit reader's behavior (RSTn → _RestartMarker; any other
-        marker or EOF → error)."""
-        m = self.marker
-        if m is not None and 0xD0 <= m <= 0xD7:
-            raise _RestartMarker(m)
-        if m is None or m == -1:
-            raise ValueError("truncated JPEG entropy data")
-        raise ValueError(f"unexpected marker 0xFF{m:02x} in entropy data")
-
-    def read_bit(self) -> int:
-        n = self.nbits
-        if n == 0:
-            self._refill(8)
-            n = self.nbits
-            if n == 0:
-                self._starved()
-        n -= 1
-        self.nbits = n
-        b = (self.acc >> n) & 1
-        self.acc &= (1 << n) - 1
-        return b
-
-    def receive(self, n: int) -> int:
-        if n == 0:
-            return 0
-        if self.nbits < n:
-            self._refill(n)
-            if self.nbits < n:
-                self._starved()
-        rem = self.nbits - n
-        v = self.acc >> rem
-        self.nbits = rem
-        self.acc &= (1 << rem) - 1
-        return v
-
-    def peek16(self) -> int:
-        """Next 16 bits zero-padded past a marker/EOF (prefix-free
-        codes of length <= the real bit count decode identically)."""
-        if self.nbits < 16:
-            self._refill(16)
-        n = self.nbits
-        if n >= 16:
-            return self.acc >> (n - 16)
-        return (self.acc << (16 - n)) & 0xFFFF
-
-    def align_past_restart(self) -> None:
-        """Skip to just past the RSTn marker (drops any buffered
-        padding bits; `pos` never passes a real marker, so the scan
-        below cannot miss it)."""
-        self.acc = 0
-        self.nbits = 0
-        self.marker = None
-        d = self.data
-        pos = self.pos
-        while not (
-            d[pos] == 0xFF and 0xD0 <= d[pos + 1] <= 0xD7
-        ):
-            pos += 1
-        self.pos = pos + 2
-
-
 class _RestartMarker(Exception):
     def __init__(self, code: int) -> None:
         self.code = code
@@ -830,7 +722,7 @@ def _build_huff_decoder(bits: list[int], vals: list[int], is_dc: bool = False):
     """16-bit lookup tables from a DHT's BITS/HUFFVAL lists (canonical
     code assignment, T.81 C.2): a code of length L at canonical value
     c owns every 16-bit word whose top L bits equal c, so one
-    `peek16` + two byte-table reads decode any symbol. (sym, len) as
+    16-bit peek + two byte-table reads decode any symbol. (sym, len) as
     Python bytes — the fastest random-access container here; length 0
     marks a hole in the canonical code space (invalid code).
 
@@ -904,22 +796,6 @@ def _build_huff_decoder(bits: list[int], vals: list[int], is_dc: bool = False):
         _HUFF_LUT_CACHE.pop(next(iter(_HUFF_LUT_CACHE)))
     _HUFF_LUT_CACHE[key] = out
     return out
-
-
-def _huff_decode(reader: _BitReader, table) -> int:
-    sym_t, len_t = table[0], table[1]
-    idx = reader.peek16()
-    length = len_t[idx]
-    if length == 0 or length > reader.nbits:
-        if reader.nbits < 16:
-            # the peek was zero-padded: a marker/EOF cut the stream
-            # mid-code — surface it like the per-bit reader did
-            reader._starved()
-        raise ValueError("invalid Huffman code in JPEG stream")
-    rem = reader.nbits - length
-    reader.nbits = rem
-    reader.acc &= (1 << rem) - 1
-    return sym_t[idx]
 
 
 def _decode_jpeg(payload: bytes) -> "np.ndarray":
@@ -1117,7 +993,7 @@ def _decode_scan(
     n_mcu = mcux * mcuy
     mcu = 0
     # Hot-loop form (r08): the bit-reader state lives in plain locals
-    # and the refill / peek16 / Huffman-LUT / EXTEND steps are inlined
+    # and the refill / 16-bit peek / Huffman-LUT / EXTEND steps are inlined
     # — the method-call form spent more time on ~5 Python calls per
     # symbol than on the decode itself. r09 on top of that:
     # (1) the entropy stream is split ONCE into marker-free segments
@@ -1127,11 +1003,11 @@ def _decode_scan(
     #     resolve code length, run/size AND the EXTENDed amplitude in
     #     one 16-bit lookup when the pair fits 16 bits (the common
     #     case). The two-step path below remains for longer pairs and
-    #     for the zero-padded stream tail, preserving _BitReader's
-    #     exact starvation/marker semantics: refill never crosses a
-    #     real marker (segments end at markers), peeks past
-    #     end-of-bits are zero-padded, starvation raises
-    #     _RestartMarker on RSTn / ValueError otherwise.
+    #     for the zero-padded stream tail, with exact starvation/marker
+    #     semantics: refill never crosses a real marker (segments end
+    #     at markers), peeks past end-of-bits are zero-padded,
+    #     starvation raises _RestartMarker on RSTn / ValueError
+    #     otherwise.
     d = payload
     acc = nbits = 0
     u, term, term_pos = _entropy_segment(d, data_start)
@@ -1386,7 +1262,7 @@ def _decode_progressive_scan(
     # they copy the shared state `st` = [acc, nbits, upos] into plain
     # locals and sync back in try/finally, so the restart-resync path
     # always sees consistent state. Starvation/zero-pad/marker
-    # semantics match _BitReader exactly: starvation can only occur
+    # semantics match the baseline loop: starvation can only occur
     # once the segment is exhausted, so the terminator marker decides
     # _RestartMarker vs ValueError.
     d = payload

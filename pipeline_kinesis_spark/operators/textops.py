@@ -283,24 +283,29 @@ def winnow_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrink), and every fingerprint is one of the doc's gram hashes
     (mins are elements, not synthetic values)."""
     k, w = 8, 4
-    # _low materialized once — see winnow_fingerprints (r15): the
-    # inlined lower(trim(text)) re-ran per char position inside the
-    # interpreted lambda, O(len²) per document.
-    d = spread(load(spark, sf_dir, "documents"), "doc_id").withColumn(
-        "_low", F.expr("lower(trim(text))")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id").select(
+        "doc_id", F.expr("lower(trim(text))").alias("_low")
     )
-    grams = (
-        f"transform(sequence(1, greatest(length(_low) - {k - 1}, 0)), "
-        f"i -> xxhash64(substring(_low, i, {k})))"
+    # the fingerprints come from the same codegen'd rows as
+    # winnow_fingerprints; the gram-hash array (the containment check's
+    # reference set) is built only when at least one gram exists —
+    # sequence(1, 0) counts DOWN, so an unguarded short document would
+    # hash a phantom gram at position 0
+    n = F.length("_low") - (k - 1)
+    grams = F.when(
+        n >= 1,
+        F.transform(
+            F.sequence(F.lit(1), n),
+            lambda i: F.xxhash64(F.substring("_low", i, F.lit(k))),
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
+    d = d.withColumn("_g", grams).join(
+        _winnow_fp_rows(d, k, w).withColumnRenamed("fingerprints", "_fp"),
+        "doc_id",
     )
-    d = d.withColumn("_g", F.expr(grams))
-    fp = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(_g) - {w - 1}, 0)), "
-        f"j -> array_min(slice(_g, j, {w}))))"
-    )
-    d = d.withColumn("_fp", fp)
-    n_grams = F.size("_g").cast("long")
-    n_windows = F.greatest(F.size("_g") - (w - 1), F.lit(0)).cast("long")
+    # counts from the text length, as WINNOW_STATS_SQL computes them
+    n_grams = F.greatest(n, F.lit(0)).cast("long")
+    n_windows = F.greatest(n_grams - (w - 1), F.lit(0))
     n_fp = F.size("_fp").cast("long")
     return d.select(
         "doc_id",

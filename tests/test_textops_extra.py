@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from pipeline_kinesis_spark.operators.similarity import (
@@ -9,7 +10,12 @@ from pipeline_kinesis_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_ivf,
 )
-from pipeline_kinesis_spark.operators.textops import winnow_fingerprints
+from pipeline_kinesis_spark.operators.textops import (
+    WINNOW_STATS_SQL,
+    winnow_fingerprint_stats,
+    winnow_fingerprints,
+)
+from pipeline_kinesis_spark.testing import compare_to_oracle, oracle_connection
 
 
 def test_winnow_deterministic_and_shaped(spark, sf_dir):
@@ -44,6 +50,30 @@ def test_winnow_detects_shared_substrings(spark, sf_dir):
                 assert fps[i] & fps[j], f"docs {i},{j} share text, no fp overlap"
     # sanity: the corpus's shared vocabulary produces at least one case
     assert checked > 0
+
+
+def test_winnow_stats_short_documents_match_oracle(spark, tmp_path):
+    """Documents shorter than one gram (k=8) or one window (k+w-1=11)
+    after lower(trim(...)): no crash and no phantom grams — the row
+    matches WINNOW_STATS_SQL in DuckDB. Lengths 0, 1, 8, 10 and 11
+    straddle both edges; surrounding spaces check that the counts come
+    from the trimmed text."""
+    texts = ["", "  ", "A", "AbCdEfGh", " abcdefghij ", "abcdefghijk"]
+    d = tmp_path / "corpus"
+    d.mkdir()
+    # one parquet FILE, which both Spark and the DuckDB oracle read
+    pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+        d / "documents.parquet"
+    )
+    con = oracle_connection(str(d))
+    try:
+        got = winnow_fingerprint_stats(spark, str(d))
+        assert compare_to_oracle(got, con, WINNOW_STATS_SQL) == []
+    finally:
+        con.close()
+    by_id = {r.doc_id: r for r in got.collect()}
+    assert [by_id[i].n_grams for i in range(len(texts))] == [0, 0, 0, 1, 3, 4]
+    assert [by_id[i].n_windows for i in range(len(texts))] == [0, 0, 0, 0, 0, 1]
 
 
 def test_ivf_recall_against_exact(spark, sf_dir):
